@@ -15,6 +15,12 @@ Run after each round's CORRECTNESS file lands:
 
     python tools/update_evidence.py
 
+and commit the round's ``CORRECTNESS_rNN.json`` together with the
+regenerated ``driver_evidence.json``. Without the fold the ledger still
+shows the just-checked names at their older rounds, so the 50-name
+window repeats the round just checked and the oldest-proven tail goes
+unchecked.
+
 ``tests/test_oracle_queries.py::test_driver_evidence_current`` fails if
 the committed artifact is stale, so forgetting to regenerate is caught
 by the gate, not by the judge.
