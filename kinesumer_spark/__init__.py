@@ -22,8 +22,12 @@ package exposes
   inspection utilities (pushdown/broadcast audits).
 """
 
-from kinesumer_spark.session import get_spark
-from kinesumer_spark.catalog import TABLES, load_tables
+from kinesumer_spark import zipcache as _zipcache
+
+_zipcache.install()
+
+from kinesumer_spark.session import get_spark  # noqa: E402
+from kinesumer_spark.catalog import TABLES, load_tables  # noqa: E402
 
 
 def __getattr__(name):

@@ -136,6 +136,10 @@ _MAX_PARTITION_BYTES = 128 * 1024 * 1024
 # identity — the correct decision on every real multi-split layout.
 _FAIL_OPEN_BOUND = 1 << 30
 
+# table paths whose probe failed: they fail open for the life of the
+# process instead of re-probing an object-store URI on every call
+_UNPROBEABLE: set[str] = set()
+
 
 def scan_task_bound(sf_dir: str, name: str) -> int:
     """Upper bound on the scan tasks Spark can extract from a table's
@@ -156,8 +160,12 @@ def scan_task_bound(sf_dir: str, name: str) -> int:
     FAILS OPEN: it returns a bound larger than any parallelism, making
     :func:`fan_out` the identity, rather than raising out of the gate and
     taking the query down. On such layouts the identity is also the right
-    answer — object-store tables at scale have plenty of natural splits."""
+    answer — object-store tables at scale have plenty of natural splits.
+    The fail-open result is memoized per path, so such a path is probed
+    once per process."""
     path = table_path(sf_dir, name)
+    if path in _UNPROBEABLE:
+        return _FAIL_OPEN_BOUND
     try:
         key = (path, _path_state(path))
         if key not in _SPLITS_CACHE:
@@ -183,6 +191,7 @@ def scan_task_bound(sf_dir: str, name: str) -> int:
             _SPLITS_CACHE[key] = max(1, total)
         return _SPLITS_CACHE[key]
     except OSError:
+        _UNPROBEABLE.add(path)
         return _FAIL_OPEN_BOUND
 
 

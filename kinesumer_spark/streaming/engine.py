@@ -28,6 +28,17 @@ and plans its own files/offsets per batch (driver-side, like the
 leader's shard-cache refresh O10 but free); state (dedup/window) is
 keyed by (stream, shard_id) downstream, so executors scale with shard
 count × partitions.
+
+The ledger grows by one file per microbatch and nothing compacts it on
+its own, so a commit must not cost O(history). Each ``Engine`` keeps the
+ledger's high-water mark per (stream, shard) in memory: folded from
+every file on first use (not at construction), max-merged with each of
+its own commits after the rename. A commit lists the ledger directory
+once (~3 ms at 5,000 files) and reads no file; a ``.json`` file this
+handle did not write or fold (another handle, a compaction elsewhere,
+a crash before the map update) triggers one full re-fold. The marks job
+aggregates the persisted batch in one partition, so it runs as a single
+stage with no shuffle.
 """
 
 from __future__ import annotations
@@ -170,6 +181,26 @@ def ordered_per_shard(records: DataFrame, fn, output_schema: str) -> DataFrame:
     return records.groupBy("stream", "shard_id").applyInPandas(run, output_schema)
 
 
+def _max_seq(a: str | None, b: str) -> str:
+    """The higher of two decimal sequence numbers, in
+    ``Engine._seq_order_key`` order; ``a`` may be absent."""
+    if a is None or Engine._seq_order_key(b) > Engine._seq_order_key(a):
+        return b
+    return a
+
+
+def _fold_ledger(ledger_dir: str, names) -> dict[tuple[str, str], str]:
+    """Highest mark per (stream, shard) over the named ledger files."""
+    out: dict[tuple[str, str], str] = {}
+    for fn in sorted(names):
+        with open(os.path.join(ledger_dir, fn)) as f:
+            doc = json.load(f)
+        for cp in doc["checkpoints"]:
+            k = (cp["stream"], cp["shard_id"])
+            out[k] = _max_seq(out.get(k), cp["sequence_number"])
+    return out
+
+
 @dataclass
 class CommitConfig:
     """Mirror of the reference's CommitConfig (kinesumer.go:77-95).
@@ -268,6 +299,11 @@ class Engine:
         # process (driver memory only — after a restart the flush re-runs
         # once and the committed-seq filter makes it a no-op)
         self._flushed: set[tuple[str, str]] = set()
+        # in-memory ledger high-water (see checkpoints()): folded lazily
+        # on first read, so construction stays O(1) at any ledger size
+        self._ledger_lock = threading.Lock()
+        self._hw: dict[tuple[str, str], str] | None = None
+        self._hw_files: dict[str, int] = {}  # ledger .json name -> inode
         os.makedirs(self._ledger_dir(), exist_ok=True)
 
     # -- paths -------------------------------------------------------------
@@ -472,9 +508,8 @@ class Engine:
         with self._lock:
             if not hasattr(self, "_marks"):
                 self._marks: dict[tuple[str, str], str] = {}
-            prev = self._marks.get((stream, shard_id))
-            if prev is None or self._seq_order_key(sequence_number) > self._seq_order_key(prev):
-                self._marks[(stream, shard_id)] = sequence_number
+            k = (stream, shard_id)
+            self._marks[k] = _max_seq(self._marks.get(k), sequence_number)
 
     def _monotonic_marks(
         self, marks: dict[tuple[str, str], str]
@@ -482,16 +517,12 @@ class Engine:
         """Max-merge new marks against the ledger's current high-water:
         a crash-replayed (or deferred-then-flushed) batch re-committing
         older sequence numbers must never REGRESS a shard's committed
-        mark — checkpoints() is last-writer-wins by file order, so
-        without this a later batch file holding older marks would win."""
+        mark, so every ledger file holds marks at or above every earlier
+        file's for its shards."""
         existing = self.checkpoints()
-        out: dict[tuple[str, str], str] = {}
-        for k, seq in marks.items():
-            prev = existing.get(k)
-            if prev is not None and self._seq_order_key(prev) > self._seq_order_key(seq):
-                seq = prev
-            out[k] = seq
-        return out
+        return {
+            k: _max_seq(existing.get(k), seq) for k, seq in marks.items()
+        }
 
     def _write_ledger_file(
         self,
@@ -530,7 +561,26 @@ class Engine:
             )
             f.flush()
             os.fsync(f.fileno())
+            inode = os.fstat(f.fileno()).st_ino
         os.replace(tmp, path)
+        self._note_ledger_write(name, inode, marks)
+
+    def _note_ledger_write(
+        self, name: str, inode: int, marks: dict[tuple[str, str], str]
+    ) -> None:
+        """Fold this handle's own just-renamed file into the in-memory
+        high-water. Runs only after ``os.replace`` succeeded; a crash
+        before it leaves a file the next listing does not know, which
+        re-folds the whole ledger. Overwriting an existing name (a
+        replayed batch id, a second compaction) may drop marks the old
+        file held, so it too re-folds instead of merging."""
+        with self._ledger_lock:
+            if self._hw is None or name in self._hw_files:
+                self._hw = None
+                return
+            self._hw_files[name] = inode
+            for k, seq in marks.items():
+                self._hw[k] = _max_seq(self._hw.get(k), seq)
 
     def commit_marks(self, batch_id: int) -> None:
         """Flush manually-staged marks to the ledger — Commit() parity
@@ -544,27 +594,36 @@ class Engine:
             self._monotonic_marks(marks),
         )
 
-    def commit(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Write per-(stream, shard) high-water marks for one batch —
-        the ShardCheckPoint row set of statemodel.go:40-45. Idempotent
-        per batch_id (overwrite), like the reference's re-put commits."""
+    @staticmethod
+    def _batch_marks(batch_df: DataFrame) -> DataFrame:
+        """Highest sequence number per (stream, shard) in one batch.
+
+        A persisted batch (``run()``'s auto-commit path) is aggregated
+        in ONE partition: reading the cache in one task and aggregating
+        there needs no Exchange, so the job is one stage, not a map
+        stage plus a shuffle-read stage. Any other DataFrame keeps the
+        distributed plan, so an unpersisted caller batch does not have
+        its whole upstream recomputed in a single task."""
+        src = batch_df.coalesce(1) if batch_df.is_cached else batch_df
         # numeric max over decimal strings of any length: order by
         # (length, string) — plain F.max would rank '9…' above '10…' for
         # unpadded connector sequence numbers (decimal casts can't help:
         # Kinesis sequence numbers exceed decimal(38,0))
-        marks = (
-            batch_df.groupBy("stream", "shard_id")
-            .agg(
-                F.max_by(
-                    "sequence_number",
-                    F.struct(
-                        F.length("sequence_number").alias("l"),
-                        F.col("sequence_number").alias("s"),
-                    ),
-                ).alias("sequence_number")
-            )
-            .collect()
+        return src.groupBy("stream", "shard_id").agg(
+            F.max_by(
+                "sequence_number",
+                F.struct(
+                    F.length("sequence_number").alias("l"),
+                    F.col("sequence_number").alias("s"),
+                ),
+            ).alias("sequence_number")
         )
+
+    def commit(self, batch_df: DataFrame, batch_id: int) -> None:
+        """Write per-(stream, shard) high-water marks for one batch —
+        the ShardCheckPoint row set of statemodel.go:40-45. Idempotent
+        per batch_id (overwrite), like the reference's re-put commits."""
+        marks = self._batch_marks(batch_df).collect()
         merged = self._monotonic_marks(
             {(r["stream"], r["shard_id"]): r["sequence_number"] for r in marks}
         )
@@ -964,17 +1023,35 @@ class Engine:
 
     # -- observability -----------------------------------------------------
     def checkpoints(self) -> dict[tuple[str, str], str]:
-        """Latest committed sequence number per (stream, shard_id) —
-        ``ListCheckPoints`` parity (statestore.go:224-257)."""
-        out: dict[tuple[str, str], str] = {}
-        for fn in sorted(os.listdir(self._ledger_dir())):
-            if not fn.endswith(".json"):
-                continue
-            with open(os.path.join(self._ledger_dir(), fn)) as f:
-                doc = json.load(f)
-            for cp in doc["checkpoints"]:
-                out[(cp["stream"], cp["shard_id"])] = cp["sequence_number"]
-        return out
+        """Highest committed sequence number per (stream, shard_id) —
+        ``ListCheckPoints`` parity (statestore.go:224-257).
+
+        Answered from an in-memory high-water map, like the reference's
+        in-memory offsets (kinesumer.go:767-789). The map is the max
+        fold of every ledger file, built on the first call; each commit
+        then max-merges its own file in after the rename. Every call
+        lists the ledger directory once (a few ms at 5,000 files, no
+        file reads) and re-folds the whole ledger when the listing holds
+        a ``.json`` file this handle neither folded nor wrote, or lacks
+        one it knew: a second ``Engine`` on the same app, a
+        ``compact_ledger`` from another handle, or a crash between a
+        rename and the map update. Commits max-merge against this map,
+        so no file, the sort-first ``a-snapshot.json`` included, can
+        lower a mark."""
+        ledger = self._ledger_dir()
+        with self._ledger_lock:
+            while True:
+                with os.scandir(ledger) as it:
+                    listing = {
+                        e.name: e.inode() for e in it if e.name.endswith(".json")
+                    }
+                if self._hw is not None and listing == self._hw_files:
+                    return dict(self._hw)
+                try:
+                    self._hw = _fold_ledger(ledger, listing)
+                except FileNotFoundError:
+                    continue  # compacted away mid-fold: list again
+                self._hw_files = listing
 
     # predicate: envelope row strictly after its committed mark, in the
     # length-then-lexicographic order of _seq_order_key (unpadded
@@ -1115,15 +1192,13 @@ class Engine:
 
     def compact_ledger(self) -> int:
         """Compact the per-batch commit files into ONE snapshot holding
-        the latest mark per (stream, shard) — the ledger's answer to
+        the highest mark per (stream, shard) — the ledger's answer to
         unbounded small-file growth (a month of 1 s microbatches is
         ~2.6 M files; the DynamoDB analog is a single row per shard by
         construction, statemodel.go:40-45). Returns the number of files
-        removed. Crash-safe: the snapshot (named to sort BEFORE any
-        live batch file, so later batches still win replay order) is
-        written atomically first, old files removed after; a crash
-        between leaves duplicates, which checkpoints() resolves by
-        last-writer-wins exactly as before.
+        removed. Crash-safe: the snapshot is written atomically first,
+        old files removed after; a crash between leaves duplicates,
+        which checkpoints()'s max fold resolves to the same marks.
 
         Safe against a live auto-committing query: the file list is
         taken FIRST and the snapshot is built from exactly those files —
@@ -1137,16 +1212,9 @@ class Engine:
         )
         if not old_files:
             return 0
-        # last-writer-wins over exactly the listed files (same fold as
-        # checkpoints(), restricted to the snapshot's input set)
-        cps: dict[tuple[str, str], str] = {}
-        for fn in old_files:
-            with open(os.path.join(self._ledger_dir(), fn)) as f:
-                doc = json.load(f)
-            for cp in doc["checkpoints"]:
-                cps[(cp["stream"], cp["shard_id"])] = cp["sequence_number"]
-        # "a-" sorts before every "batch-…" file, so live batches keep
-        # winning last-writer-wins replay; also avoids colliding with
+        # the same fold as checkpoints(), restricted to the listed files
+        cps = _fold_ledger(self._ledger_dir(), old_files)
+        # "a-" sorts before every "batch-…" file and cannot collide with
         # generation 0 / batch 0's own file name
         snap_name = "a-snapshot.json"
         self._write_ledger_file(snap_name, -1, cps, compacted=True)

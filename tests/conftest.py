@@ -15,9 +15,9 @@ def spark(tmp_path_factory):
     from kinesumer_spark.session import get_spark
 
     wh = tmp_path_factory.mktemp("warehouse")
+    # get_spark's default cores: $SPARK_GRAFT_CPUS, else every local core
     s = get_spark(
         app_name="kinesumer_spark_tests",
-        cpus=8,
         driver_memory="8g",
         extra_conf={"spark.sql.warehouse.dir": str(wh)},
     )

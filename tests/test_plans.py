@@ -1153,6 +1153,28 @@ def test_scan_task_bound_fails_open_on_non_local_paths(spark):
     assert fan_out(d, "s3a://bucket/prefix", "documents") is d
 
 
+def test_scan_task_bound_probes_unprobeable_path_once(monkeypatch):
+    """The fail-open bound is memoized: a path whose probe failed is not
+    probed again on later calls (an object-store table is asked for by
+    every fan_out on it)."""
+    import kinesumer_spark.catalog as catalog
+
+    probes = {"n": 0}
+    real_state = catalog._path_state
+
+    def counting_state(path):
+        probes["n"] += 1
+        return real_state(path)
+
+    monkeypatch.setattr(catalog, "_path_state", counting_state)
+    sf_dir = "s3a://bucket/probe-once"
+    for _ in range(3):
+        assert catalog.scan_task_bound(sf_dir, "documents") == catalog._FAIL_OPEN_BOUND
+    assert probes["n"] == 1
+    # a probeable layout is still cached by file state, not memoized away
+    assert catalog.scan_task_bound(SF_SMALL, "documents") == 1
+
+
 def test_scratch_base_resolution(monkeypatch):
     """r18: per-run scratch (staging chunks, streaming checkpoints,
     scratch sinks) prefers a RAM-backed /dev/shm under the default

@@ -1367,6 +1367,150 @@ def test_ledger_crash_at_every_step(spark, tmp_path, monkeypatch):
         assert files == ["a-snapshot.json"]
 
 
+def _ledger_engine(spark, root, app="t-hw"):
+    return Engine(spark, app=app, checkpoint_root=str(root))
+
+
+def _commit(eng, batch_id, **marks):
+    """commit_marks with ``shard=seq`` marks on stream "s"."""
+    for shard, seq in marks.items():
+        eng.mark("s", shard, str(seq).zfill(21))
+    eng.commit_marks(batch_id)
+
+
+def _z(n):
+    return str(n).zfill(21)
+
+
+def test_ledger_high_water_folds_once(spark, tmp_path, monkeypatch):
+    """The ledger is folded lazily, on the first read, and only once:
+    this handle's own commits merge into the in-memory high-water
+    without reading any ledger file again."""
+    import kinesumer_spark.streaming.engine as eng_mod
+
+    folds = {"n": 0}
+    real_fold = eng_mod._fold_ledger
+
+    def counting_fold(ledger_dir, names):
+        folds["n"] += 1
+        return real_fold(ledger_dir, names)
+
+    monkeypatch.setattr(eng_mod, "_fold_ledger", counting_fold)
+    seed = _ledger_engine(spark, tmp_path)
+    for b in range(5):
+        _commit(seed, b, a=b + 1, b=10 * (b + 1))
+    folds["n"] = 0
+    eng = _ledger_engine(spark, tmp_path)
+    assert folds["n"] == 0  # construction reads nothing
+    assert eng.checkpoints() == {("s", "a"): _z(5), ("s", "b"): _z(50)}
+    assert folds["n"] == 1
+    for b in range(5, 10):
+        _commit(eng, b, a=b + 1)
+        assert eng.checkpoints()[("s", "a")] == _z(b + 1)
+    assert folds["n"] == 1
+
+
+def test_ledger_crash_between_rename_and_map_update(spark, tmp_path, monkeypatch):
+    """A commit that dies after its file's rename but before the
+    in-memory update must still be visible: the next checkpoints()
+    equals the full fold of the ledger (a fresh handle's view)."""
+    eng = _ledger_engine(spark, tmp_path)
+    _commit(eng, 0, a=3, b=4)
+    assert eng.checkpoints() == {("s", "a"): _z(3), ("s", "b"): _z(4)}
+
+    def crash(*_a, **_k):
+        raise RuntimeError("simulated crash after os.replace")
+
+    monkeypatch.setattr(eng, "_note_ledger_write", crash)
+    with pytest.raises(RuntimeError):
+        _commit(eng, 1, a=7)
+    monkeypatch.undo()
+    full = _ledger_engine(spark, tmp_path).checkpoints()
+    assert full == {("s", "a"): _z(7), ("s", "b"): _z(4)}
+    assert eng.checkpoints() == full
+    # and the handle keeps committing on top of the re-folded map
+    _commit(eng, 2, b=9)
+    assert eng.checkpoints() == _ledger_engine(spark, tmp_path).checkpoints()
+    assert eng.checkpoints()[("s", "b")] == _z(9)
+
+
+def test_ledger_sees_other_handles_writes_and_compactions(spark, tmp_path):
+    """Two handles on one ledger: each sees the other's commits and
+    compactions on its next read, including a compaction that folded
+    a batch this handle never listed into a snapshot it already knew
+    by name (same name set, new file)."""
+    a = _ledger_engine(spark, tmp_path)
+    b = _ledger_engine(spark, tmp_path)
+    _commit(a, 0, x=5)
+    assert a.checkpoints() == {("s", "x"): _z(5)}
+    # a new file from the other handle
+    _commit(b, 1, x=8, y=2)
+    assert a.checkpoints() == {("s", "x"): _z(8), ("s", "y"): _z(2)}
+    # the other handle overwrites a file name this handle wrote
+    _commit(b, 0, y=6)
+    assert a.checkpoints()[("s", "y")] == _z(6)
+    # compaction from the other handle: marks unchanged, one file left
+    assert b.compact_ledger() == 2
+    assert a.checkpoints() == {("s", "x"): _z(8), ("s", "y"): _z(6)}
+    # the other handle commits and compacts again between two reads:
+    # the listing is {a-snapshot.json} both times, but the file is new
+    _commit(b, 2, x=11)
+    b.compact_ledger()
+    assert sorted(os.listdir(a._ledger_dir())) == ["a-snapshot.json"]
+    assert a.checkpoints() == {("s", "x"): _z(11), ("s", "y"): _z(6)}
+    # and this handle's next commit merges against what it now sees
+    _commit(a, 3, y=1)
+    assert a.checkpoints() == b.checkpoints() == {
+        ("s", "x"): _z(11),
+        ("s", "y"): _z(6),
+    }
+
+
+def test_commit_marks_monotone_across_handles(spark, tmp_path):
+    """commit_marks never lowers a committed mark, also when the lower
+    mark comes from a handle whose staged marks are older, and the
+    file it writes carries the high-water, not its stale mark."""
+    import json as _json
+
+    a = _ledger_engine(spark, tmp_path)
+    b = _ledger_engine(spark, tmp_path)
+    _commit(a, 0, x=9)
+    b.checkpoints()  # b folds before a moves on
+    _commit(a, 1, x=12)
+    _commit(b, 2, x=4)
+    assert a.checkpoints()[("s", "x")] == b.checkpoints()[("s", "x")] == _z(12)
+    with open(os.path.join(b._ledger_dir(), f"batch-000000-{2:020d}.json")) as f:
+        doc = _json.load(f)
+    assert doc["checkpoints"] == [
+        {"stream": "s", "shard_id": "x", "sequence_number": _z(12)}
+    ]
+
+
+def test_batch_marks_single_stage_on_persisted_batch(spark):
+    """The auto-commit marks job on a persisted batch aggregates in one
+    partition: its executed plan holds no Exchange, and it still picks
+    the numerically highest sequence number per shard."""
+    rows = [
+        ("s", f"sh{i % 3}", str(n), None, None, None)
+        for i, n in enumerate([9, 10, 8, 99, 100, 7, 5, 1000])
+    ]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 4), RECORD_SCHEMA
+    )
+    # the unpersisted batch keeps the distributed two-stage plan
+    unpersisted = Engine._batch_marks(df)._jdf.queryExecution().executedPlan()
+    assert "Exchange" in unpersisted.toString()
+    df.persist()
+    try:
+        marks = Engine._batch_marks(df)
+        got = {(r["stream"], r["shard_id"]): r["sequence_number"] for r in marks.collect()}
+        plan = marks._jdf.queryExecution().executedPlan().toString()
+    finally:
+        df.unpersist()
+    assert got == {("s", "sh0"): "99", ("s", "sh1"): "1000", ("s", "sh2"): "8"}
+    assert "Exchange" not in plan, plan
+
+
 def test_merge_reshard_child_waits_for_both_parents(spark, tmp_path):
     """A merge reshard is two lineage edges with the same child: the
     child's gate must stay closed until BOTH parents are committed
